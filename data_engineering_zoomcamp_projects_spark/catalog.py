@@ -36,11 +36,6 @@ TABLES = (
 FIXED_DIMS = ("region", "nation")
 
 
-#: (sorted input files) -> total parquet row groups — footer metadata
-#: of immutable corpus files, probed once per session instead of once
-#: per widen_if_narrow call (the _CODEBOOK_MEMO discipline)
-_ROW_GROUP_MEMO: dict[tuple, int] = {}
-
 #: one warning per session when the row-group probe degrades (r13
 #: ADVICE: the silent no-op hid the whole widen fix on unrecognized
 #: URI forms)
@@ -157,19 +152,24 @@ def widen_if_narrow(
         try:
             files = df.inputFiles()
             if 0 < len(files) <= 64:
-                key = tuple(sorted(files))
-                if key not in _ROW_GROUP_MEMO:
+                from .memo import session_memo
+
+                paths = sorted(_local_parquet_path(f) for f in files)
+                if len({_table_root(p) for p in paths}) != 1:
+                    raise _BenignProbeSkip
+
+                def count_row_groups() -> int:
                     import pyarrow.parquet as pq
 
-                    paths = [_local_parquet_path(f) for f in files]
-                    if len({_table_root(p) for p in paths}) != 1:
-                        raise _BenignProbeSkip
-                    row_groups = 0
-                    for local in paths:
-                        with pq.ParquetFile(local) as pf:
-                            row_groups += pf.num_row_groups
-                    _ROW_GROUP_MEMO[key] = row_groups
-                parts = min(parts, _ROW_GROUP_MEMO[key])
+                    return sum(pq.read_metadata(p).num_row_groups for p in paths)
+
+                # footer metadata: probed once per session and file content
+                parts = min(
+                    parts,
+                    session_memo(
+                        spark, ("row_groups", *paths), paths, count_row_groups
+                    ),
+                )
         except _BenignProbeSkip:
             pass
         except Exception as exc:
@@ -210,96 +210,50 @@ def model_cache_path(
     trained model state per corpus dir — shared by the k-means centroid
     JSON and the ANN index directory (r12 review: the two private
     copies had already drifted). The fingerprint is the source
-    parquet's (size, mtime_ns) plus the caller's hyperparameter/version
-    string, so a regenerated corpus or a training-code version bump
-    rebuilds, while an unchanged fingerprint means the persisted state
-    IS what retraining would produce (callers persist only
-    bit-deterministic derivations). Lives under the repo's gitignored
-    .localdata/model_cache, never under sf_dir (testdata is
+    parquet's uncapped ``stat_fingerprint`` plus the caller's
+    hyperparameter/version string, so a regenerated corpus or a
+    training-code version bump rebuilds, while an unchanged fingerprint
+    means the persisted state IS what retraining would produce (callers
+    persist only bit-deterministic derivations). Lives under the repo's
+    gitignored .localdata/model_cache, never under sf_dir (testdata is
     read-only). Only collect()ed model state belongs here — in-plan
-    state (logreg weights) must never be cached to disk.
-
-    Spark-written corpora are DIRECTORIES, and a directory's own stat
-    is useless as a content fingerprint (st_size is fs metadata; mtime
-    moves only when entries are added/removed, so an in-place rewrite
-    of a part file under the same name would serve stale model state —
-    r12 ADVICE). For directories the fingerprint folds the sorted
-    (relative name, size, mtime_ns) of every contained data file
-    instead."""
+    state (logreg weights) must never be cached to disk."""
     import hashlib
     import os
 
     src = os.path.join(sf_dir, f"{src_table}.parquet")
+    fp = stat_fingerprint(src)
     if os.path.isdir(src):
-        entries = []
-        for root_dir, _dirs, files in os.walk(src):
-            for f in sorted(files):
-                if f.startswith((".", "_")):
-                    continue  # checksums/_SUCCESS markers, not data
-                st = os.stat(os.path.join(root_dir, f))
-                rel = os.path.relpath(os.path.join(root_dir, f), src)
-                entries.append(f"{rel}:{st.st_size}:{st.st_mtime_ns}")
-        digest = hashlib.md5(";".join(sorted(entries)).encode()).hexdigest()
-        fp = f"dir:{digest}:{params}"
-    else:
-        st = os.stat(src)
-        fp = f"{st.st_size}:{st.st_mtime_ns}:{params}"
+        fp = "dir:" + hashlib.md5(fp.encode()).hexdigest()
     tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:16]
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     return (
         os.path.join(root, ".localdata", "model_cache", f"{kind}_{tag}{ext}"),
-        fp,
+        f"{fp}:{params}",
     )
 
 
-#: (absolute path) -> (stat fingerprint, inferred schema). Parquet
-#: schema INFERENCE launches a footer-reading Spark job per
-#: spark.read.parquet call (~0.3-0.5 s of fixed driver+scheduling cost
-#: at any scale factor; an explicit .schema() read is ~50 ms). The
-#: memo holds the schema inference itself produced for these exact
-#: bytes — metadata, never data — keyed by the same (size, mtime_ns)
-#: fingerprint discipline as model_cache_path, so a regenerated corpus
-#: re-infers. At deploy scale this is what a real catalog (metastore /
-#: Iceberg manifest) provides: scans plan from recorded schemas, not
-#: per-query footer sampling (guide §6 driver-side planning costs).
-_PARQUET_SCHEMA_MEMO: dict[str, tuple[str, object]] = {}
-
-#: (application id, absolute path) -> (stat fingerprint, DataFrame).
-#: One step past the schema memo (r18): the OPENED relation itself is
-#: reused while its bytes are unchanged, so repeat opens skip the file
-#: LISTING as well as the inference. A partitioned directory table
-#: with more leaf dirs than
-#: spark.sql.sources.parallelPartitionDiscovery.threshold (default 32
-#: — the persisted ANN index at bench SF has ~48 cell= dirs) lists via
-#: a DISTRIBUTED Spark job on every open (~0.3 s + one job of fixed
-#: machinery per serve, measured warm); the relation memo replays the
-#: already-resolved InMemoryFileIndex instead. Still metadata only —
-#: every execution reads the parquet bytes fresh; a changed file set
-#: or content is a fingerprint miss that re-lists and re-infers.
-#: Keyed by applicationId so frames bound to a stopped session are
-#: never replayed into a new one.
-_PARQUET_RELATION_MEMO: dict[tuple[str, str], tuple[str, DataFrame]] = {}
-
-#: loud-degrade flags (one warning per session each, the r13 ADVICE
-#: rule: a silent no-op hides the optimization's absence)
+#: one warning per session when a memo input has no usable fingerprint
+#: (a silent no-op would hide the memo's absence)
 _FP_DEGRADE_LOGGED = False
 
-#: cap on the per-open fingerprint walk: a directory table with more
-#: data files than this skips memoization entirely (correct behavior —
-#: every open lists/infers as stock Spark does) instead of paying an
-#: O(files) driver-side stat pass per query construction (r17 verdict
-#: item 2). At deploy scale a manifest-backed format (Iceberg/Delta)
-#: replaces this memo outright; sandbox tables sit far below the cap.
+#: cap on the per-call fingerprint walk: a directory table with more
+#: data files than this is not content-checked (parquet opens are not
+#: memoized at all; session memo entries key by path only) instead of
+#: paying an O(files) driver-side stat pass per query construction. At
+#: deploy scale a manifest-backed format (Iceberg/Delta) replaces this
+#: walk outright; sandbox tables sit far below the cap.
 _FP_WALK_CAP = 4096
 
 
-def _parquet_stat_fp(path: str) -> str | None:
-    """(size, mtime_ns) fingerprint of a parquet file, or the folded
-    per-file stats of a directory table (the model_cache_path rule:
-    a directory's own stat is not a content fingerprint). Returns
-    None — memoization skipped, with a once-per-session warning — when
-    the directory holds more than _FP_WALK_CAP data files, so driver
-    time per open stays bounded at any table size."""
+def stat_fingerprint(path: str, cap: int | None = None) -> str | None:
+    """(size, mtime_ns) of a file, or for a directory table the sorted
+    (relative name, size, mtime_ns) of every data file it holds — a
+    directory's own stat is no content fingerprint (st_size is fs
+    metadata; mtime moves only when entries are added/removed, so an
+    in-place rewrite of a part file would go unseen).
+    Returns None when the directory holds more than ``cap`` data files;
+    raises OSError when ``path`` has no local stat."""
     import os
 
     if os.path.isdir(path):
@@ -307,21 +261,8 @@ def _parquet_stat_fp(path: str) -> str | None:
         for root_dir, _dirs, files in os.walk(path):
             for f in sorted(files):
                 if f.startswith((".", "_")):
-                    continue
-                if len(entries) >= _FP_WALK_CAP:
-                    global _FP_DEGRADE_LOGGED
-                    if not _FP_DEGRADE_LOGGED:
-                        _FP_DEGRADE_LOGGED = True
-                        import logging
-
-                        logging.getLogger(__name__).warning(
-                            "parquet memo disabled for %s: more than %d "
-                            "data files; every open will re-list and "
-                            "re-infer (use a manifest-backed table "
-                            "format at this size)",
-                            path,
-                            _FP_WALK_CAP,
-                        )
+                    continue  # checksums/_SUCCESS markers, not data
+                if cap is not None and len(entries) >= cap:
                     return None
                 st = os.stat(os.path.join(root_dir, f))
                 rel = os.path.relpath(os.path.join(root_dir, f), path)
@@ -331,55 +272,54 @@ def _parquet_stat_fp(path: str) -> str | None:
     return f"{st.st_size}:{st.st_mtime_ns}"
 
 
+def table_fingerprint(path: str) -> str | None:
+    """``stat_fingerprint`` under _FP_WALK_CAP — the validity check of
+    every session memo entry. None (logged once per session) when the
+    table is over the cap or has no local stat (an object-store URI, a
+    missing path)."""
+    try:
+        fp = stat_fingerprint(path, _FP_WALK_CAP)
+    except OSError:
+        fp = None
+    global _FP_DEGRADE_LOGGED
+    if fp is None and not _FP_DEGRADE_LOGGED:
+        _FP_DEGRADE_LOGGED = True
+        import logging
+
+        logging.getLogger(__name__).warning(
+            "no content fingerprint for %s (more than %d data files, or "
+            "no local stat): parquet opens re-list and re-infer, and "
+            "memoized state keys by path only (use a manifest-backed "
+            "table format at this size)",
+            path,
+            _FP_WALK_CAP,
+        )
+    return fp
+
+
 def read_parquet_fast(spark: SparkSession, path: str) -> DataFrame:
     """spark.read.parquet with the metadata work memoized per
     (path, content fingerprint): the first open of given bytes lists
     and infers exactly as before; while the fingerprint holds,
     subsequent opens return the SAME resolved relation — no listing
-    job, no footer-sampling job. Data is always read from the parquet
-    files at execution time; only metadata (file index + schema) is
-    reused — the in-process equivalent of a metastore/manifest (guide
-    §6: table formats with manifest metadata avoid directory listing
-    altogether; this is the strongest practical lever on a query whose
-    cost is per-call planning machinery). A non-local path (object
-    store) has no os.stat fingerprint: the memo skips loudly once per
-    session and every open degrades to stock spark.read.parquet."""
-    try:
-        fp = _parquet_stat_fp(path)
-    except OSError:
-        # unreadable/missing path: let spark.read raise its own error
-        # (or, on object-store URIs, read without memoization)
-        global _FP_DEGRADE_LOGGED
-        if not _FP_DEGRADE_LOGGED:
-            _FP_DEGRADE_LOGGED = True
-            import logging
+    job, no footer-sampling job (a partitioned directory over
+    spark.sql.sources.parallelPartitionDiscovery.threshold, such as the
+    persisted ANN index, would otherwise list via a distributed job on
+    every open). Data is always read from the parquet files at
+    execution time; only metadata (file index + schema) is reused — the
+    in-process equivalent of a metastore/manifest (table formats with
+    manifest metadata avoid directory listing altogether; this is the
+    strongest practical lever on a query whose cost is per-call
+    planning machinery). A path without a fingerprint (object
+    store, missing, over the walk cap) degrades to stock
+    spark.read.parquet on every open."""
+    if table_fingerprint(path) is None:
+        return spark.read.parquet(path)
+    from .memo import session_memo
 
-            logging.getLogger(__name__).warning(
-                "parquet memo has no local stat fingerprint for %s; "
-                "every open pays full listing + inference",
-                path,
-            )
-        return spark.read.parquet(path)
-    if fp is None:  # over the walk cap — memoization skipped loudly
-        return spark.read.parquet(path)
-    rkey = (spark.sparkContext.applicationId, path)
-    rhit = _PARQUET_RELATION_MEMO.get(rkey)
-    if rhit is not None and rhit[0] == fp:
-        return rhit[1]
-    shit = _PARQUET_SCHEMA_MEMO.get(path)
-    if shit is not None and shit[0] == fp:
-        df = spark.read.schema(shit[1]).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-        if len(_PARQUET_SCHEMA_MEMO) >= 256:
-            # bounded-memo discipline: generation-dir keys retire as
-            # tables compact; cap instead of growing per session
-            _PARQUET_SCHEMA_MEMO.clear()
-        _PARQUET_SCHEMA_MEMO[path] = (fp, df.schema)
-    if len(_PARQUET_RELATION_MEMO) >= 256:
-        _PARQUET_RELATION_MEMO.clear()
-    _PARQUET_RELATION_MEMO[rkey] = (fp, df)
-    return df
+    return session_memo(
+        spark, ("parquet", path), [path], lambda: spark.read.parquet(path)
+    )
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .catalog import register_tables
+from .memo import session_memo
 from .operators.parity import sql_dsum
 
 #: staging views: typed/renamed projections of the raw tables
@@ -64,32 +65,30 @@ _MARTS = {
 }
 
 
-#: spark application id -> sf_dir the view chain was LAST built from.
-#: Temp views live for the session, so rebuilding the chain on every
-#: mart call is pure catalog churn (~0.2 s/call). The memo tracks only
-#: the last dir: views are session-global names, so switching sf_dir
-#: overwrites them and a (session, dir) keyed cache would serve stale
-#: views when switching back.
-_LAST_BUILT: dict[str, str] = {}
-
-
-def build_transform_layer(
-    spark: SparkSession, sf_dir: str, force: bool = False
-) -> list[str]:
+def build_transform_layer(spark: SparkSession, sf_dir: str) -> list[str]:
     """Materialize the staging -> mart chain as temp views (CTAS to
     managed tables at deploy time). Returns the view names in build
-    order — the lineage a dbt DAG would show. Idempotent per session
-    while sf_dir is unchanged; pass ``force=True`` to rebuild (e.g.
-    after underlying files changed)."""
+    order — the lineage a dbt DAG would show. Temp views live for the
+    session, so rebuilding the chain on every mart call is pure catalog
+    churn (~0.2 s/call): the chain is rebuilt only when sf_dir or the
+    content of its source tables changes. One memo entry, not one per
+    dir: views are session-global names, so switching sf_dir overwrites
+    them and switching back must rebuild."""
     names = list(_STAGING) + list(_MARTS)
-    app_id = spark.sparkContext.applicationId
-    if not force and _LAST_BUILT.get(app_id) == sf_dir:
+    sources = ("orders", "lineitem", "customer")
+
+    def build() -> list[str]:
+        register_tables(spark, sf_dir, sources)
+        for name, sql in {**_STAGING, **_MARTS}.items():
+            spark.sql(sql).createOrReplaceTempView(name)
         return names
-    register_tables(spark, sf_dir, ("orders", "lineitem", "customer"))
-    for name, sql in {**_STAGING, **_MARTS}.items():
-        spark.sql(sql).createOrReplaceTempView(name)
-    _LAST_BUILT[app_id] = sf_dir
-    return names
+
+    return session_memo(
+        spark,
+        "transform_layer",
+        [f"{sf_dir}/{t}.parquet" for t in sources],
+        build,
+    )
 
 
 def mart_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from data_engineering_zoomcamp_projects_spark import catalog
+from data_engineering_zoomcamp_projects_spark import catalog, memo
 
 
 def test_relation_memo_replays_open_and_reinfers_on_rewrite(spark, tmp_path):
@@ -38,4 +38,4 @@ def test_relation_memo_walk_cap_degrades_to_stock_open(spark, tmp_path, monkeypa
     b = catalog.read_parquet_fast(spark, p)
     assert a is not b
     assert a.count() == 30 and b.count() == 30
-    assert (spark.sparkContext.applicationId, p) not in catalog._PARQUET_RELATION_MEMO
+    assert (spark.sparkContext.applicationId, ("parquet", p)) not in memo._SESSION_MEMO

@@ -82,7 +82,7 @@ def test_kmeans_centroid_disk_cache_roundtrip(spark, sf_dir):
     import json
     import os
 
-    from data_engineering_zoomcamp_projects_spark import ml
+    from data_engineering_zoomcamp_projects_spark import memo, ml
 
     trained = ml.kmeans_trained_centroids(spark, sf_dir)
     path, fp = ml._kmeans_cache_path(sf_dir)
@@ -91,14 +91,14 @@ def test_kmeans_centroid_disk_cache_roundtrip(spark, sf_dir):
 
     # fresh-session shape: memo cleared -> must come back from disk,
     # bit-identical (no Spark job needed, but equality is the pin)
-    ml._KMEANS_MEMO.clear()
+    memo.clear()
     reloaded = ml.kmeans_trained_centroids(spark, sf_dir)
     assert reloaded == trained
 
     # corrupted cache degrades to retraining, same deterministic model
     with open(path, "w") as fh:
         fh.write("{not json")
-    ml._KMEANS_MEMO.clear()
+    memo.clear()
     retrained = ml.kmeans_trained_centroids(spark, sf_dir)
     assert retrained == trained
     # and the retrain re-persisted a valid cache
@@ -183,7 +183,7 @@ def test_semdedup_and_kmeans_oracle_parity_at_derived_k(spark, sf_dir):
     exactly what the oracle semantics say."""
     import duckdb
 
-    from data_engineering_zoomcamp_projects_spark import ml
+    from data_engineering_zoomcamp_projects_spark import memo, ml
     from data_engineering_zoomcamp_projects_spark.llm.dedup import (
         _semdedup_sql,
         dedup_semantic_semdedup,
@@ -193,7 +193,7 @@ def test_semdedup_and_kmeans_oracle_parity_at_derived_k(spark, sf_dir):
 
     old_target = ml.KMEANS_CELL_TARGET
     ml.KMEANS_CELL_TARGET = 50
-    ml._KMEANS_MEMO.clear()
+    memo.clear()
     try:
         k = ml.kmeans_k_for(500)
         assert k == 10
@@ -227,4 +227,21 @@ FROM a{ml.KMEANS_ITERS} GROUP BY cell ORDER BY cluster_id
         assert not problems, "\n".join(problems)
     finally:
         ml.KMEANS_CELL_TARGET = old_target
-        ml._KMEANS_MEMO.clear()
+        memo.clear()
+
+
+def test_lg_train_zero_iters_returns_zero_weight_frame(spark, sf_dir):
+    """`_lg_train` with no iterations returns the all-zero init as a
+    one-row weight frame (never None), which the scoring pass can
+    cross-join like any trained frame."""
+    from data_engineering_zoomcamp_projects_spark import ml
+
+    feats = spark.createDataFrame(
+        [(1, 0.5, -0.25), (0, -1.0, 2.0)], "y int, x0 double, x1 double"
+    )
+    for iters in (0, -1):
+        _, w = ml._lg_train(spark, feats, 2, iters=iters)
+        assert w.columns == ["wbq", "w0q", "w1q"]
+        assert [tuple(r) for r in w.collect()] == [(0, 0, 0)]
+    score = ml._lg_train_score(spark, feats, 2, iters=0).collect()[0]
+    assert (score["n"], score["n_pos"], score["w0q"]) == (2, 1, 0)

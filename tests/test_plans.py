@@ -3,6 +3,7 @@ broadcast, codegen — the 100TB-survivability checks in executable form."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_engineering_zoomcamp_projects_spark.catalog import load_table
@@ -697,8 +698,11 @@ def test_widen_if_narrow_split_bytes_scales_width(spark, sf_dir):
     target = spark.sparkContext.defaultParallelism
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     parts = d.rdd.getNumPartitions()
-    if parts * 4 > target:  # testdata changed shape; nothing to pin
-        return
+    if parts * 4 > target or target - parts < 2:
+        pytest.skip(
+            f"{parts} scan partitions vs default parallelism {target}: "
+            "no narrow scan with an interior width to pin"
+        )
     # tiny split -> saturates at default parallelism (sf1 behavior)
     assert (
         widen_if_narrow(spark, d, min_bytes=0, split_bytes=1).rdd.getNumPartitions()
@@ -706,17 +710,21 @@ def test_widen_if_narrow_split_bytes_scales_width(spark, sf_dir):
     )
     # huge split -> target collapses to the planned count: NO exchange
     assert widen_if_narrow(spark, d, min_bytes=0, split_bytes=1 << 40) is d
-    # in-between: strictly between the scan width and the default
+    # in-between: strictly between the scan width and the default.
+    # split = ceil(size / width) gives ceil(size / split) == width
+    # whenever width * (width - 1) < size (a floor-divided split could
+    # round the target up onto the default)
     import math
 
     size = int(d._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    split = max(1, size // (parts * 2 + 1))  # -> ~2*parts+1 tasks
-    want = min(target, max(parts, math.ceil(size / split)))
+    width = (parts + target) // 2
+    assert width * (width - 1) < size
+    split = math.ceil(size / width)
+    assert math.ceil(size / split) == width and parts < width < target
     got = widen_if_narrow(
         spark, d, min_bytes=0, split_bytes=split
     ).rdd.getNumPartitions()
-    assert got == want
-    assert parts < got < target
+    assert got == width
 
 
 def test_sim_index_query_reuses_persisted_index(spark, sf_dir):
